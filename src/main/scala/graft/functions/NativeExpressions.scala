@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -156,44 +157,44 @@ object NativeExpressions {
     }
   }
 
-  /** max(|v_i|) — identical to `array_max(transform(v, abs))` incl. the
-    * empty-array → null contract. See [[NativeKernels.maxAbs]]. */
+  /** max(|v_i|) — identical to `array_max(transform(v, abs))` incl. its
+    * null for an empty or all-null array and NaN ranking above every
+    * number. See [[NativeKernels.maxAbs]]. */
   case class MaxAbs(child: Expression) extends UnaryExpression {
     override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true // empty array → null (array_max)
+    override def nullable: Boolean = true // no non-null element → null (array_max)
     override protected def withNewChildInternal(newChild: Expression): MaxAbs =
       copy(child = newChild)
 
     override protected def nullSafeEval(v: Any): Any = {
-      val a = v.asInstanceOf[ArrayData]
-      if (a.numElements() == 0) null else NativeKernels.maxAbs(a)
+      val m = NativeKernels.maxAbs(v.asInstanceOf[ArrayData])
+      if (m == Double.NegativeInfinity) null else m
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a =>
         s"""
-           |if ($a.numElements() == 0) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = $Kernels.maxAbs($a);
-           |}
+           |${ev.value} = $Kernels.maxAbs($a);
+           |${ev.isNull} = ${ev.value} == Double.NEGATIVE_INFINITY;
          """.stripMargin)
   }
 
   /** round(v_i * scale) as array<tinyint> — identical to
-    * `transform(v, x -> round(x * scale).cast("tinyint"))`. See
+    * `transform(v, x -> round(x * scale).cast("tinyint"))` under the ANSI
+    * mode in effect when the expression is built (the cast's own rule), so
+    * out-of-range values raise the same error or wrap the same way. See
     * [[NativeKernels.scaleRoundInt8]]. */
-  case class ScaleRoundInt8(left: Expression, right: Expression)
-      extends BinaryExpression {
+  case class ScaleRoundInt8(left: Expression, right: Expression,
+      ansi: Boolean = SQLConf.get.ansiEnabled) extends BinaryExpression {
     override def dataType: DataType = ArrayType(ByteType, containsNull = false)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): ScaleRoundInt8 =
       copy(left = l, right = r)
 
     override protected def nullSafeEval(v: Any, s: Any): Any =
-      NativeKernels.scaleRoundInt8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double])
+      NativeKernels.scaleRoundInt8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double], ansi)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (v, s) => s"$Kernels.scaleRoundInt8($v, $s)")
+      defineCodeGen(ctx, ev, (v, s) => s"$Kernels.scaleRoundInt8($v, $s, $ansi)")
   }
 
   /** v_i / d as array<double> — identical to `transform(v, x -> x / d)`.

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ByteType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row scalar kernels called from both interpreted `eval` and the Java
@@ -417,17 +418,22 @@ object NativeKernels {
     acc
   }
 
-  /** max(|v_i|) in one pass — identical to `array_max(transform(v, abs))`
-    * on non-null-element double arrays (inputs here are cast float arrays).
-    * Empty array → the caller's expression layer returns null (array_max's
-    * contract), see [[graft.functions.NativeExpressions.MaxAbs]]. */
+  /** max(|v_i|) in one pass — identical to `array_max(transform(v, abs))`:
+    * null elements are skipped and NaN ranks above every number (Spark's
+    * double ordering), so any NaN element makes the result NaN. Returns
+    * `Double.NegativeInfinity` — never an |x| — when there is no non-null
+    * element; the expression layer maps that to array_max's null, see
+    * [[graft.functions.NativeExpressions.MaxAbs]]. */
   def maxAbs(v: ArrayData): Double = {
     val n = v.numElements()
     var mx = Double.NegativeInfinity
     var i = 0
     while (i < n) {
-      val a = math.abs(v.getDouble(i))
-      if (a > mx) mx = a
+      if (!v.isNullAt(i)) {
+        val a = math.abs(v.getDouble(i))
+        if (java.lang.Double.isNaN(a)) return a
+        if (a > mx) mx = a
+      }
       i += 1
     }
     mx
@@ -436,15 +442,24 @@ object NativeKernels {
   /** Symmetric int8 quantization pass: round(v_i * scale) as tinyint —
     * identical to `transform(v, x -> round(x * scale).cast("tinyint"))`:
     * same multiply, the same HALF_UP decimal rounding Spark's `round`
-    * performs on doubles, then the same integral cast. */
-  def scaleRoundInt8(v: ArrayData, scale: Double): ArrayData = {
+    * performs on doubles (which passes NaN and ±Inf through unrounded),
+    * then the same integral cast. Under ANSI (`ansi`) a value outside the
+    * tinyint range — NaN and ±Inf included — raises the cast's CAST_OVERFLOW
+    * error; otherwise it narrows like the legacy cast (via int, so NaN → 0,
+    * +Inf → -1, -Inf → 0). */
+  def scaleRoundInt8(v: ArrayData, scale: Double, ansi: Boolean): ArrayData = {
     val n = v.numElements()
     val out = new Array[Byte](n)
     var i = 0
     while (i < n) {
-      out(i) = java.math.BigDecimal.valueOf(v.getDouble(i) * scale)
-        .setScale(0, java.math.RoundingMode.HALF_UP)
-        .doubleValue().toByte
+      val x = v.getDouble(i) * scale
+      val r =
+        if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
+        else java.math.BigDecimal.valueOf(x)
+          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+      if (ansi && !(math.floor(r) <= Byte.MaxValue && math.ceil(r) >= Byte.MinValue))
+        throw org.apache.spark.sql.GraftColumnBridge.castOverflow(r, DoubleType, ByteType)
+      out(i) = r.toByte
       i += 1
     }
     ArrayData.toArrayData(out)

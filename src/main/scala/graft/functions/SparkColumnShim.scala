@@ -13,7 +13,14 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Deterministic listener-event drain for dev tooling (graft.Profile):
+  /** The error an ANSI cast raises for a value outside the target type
+    * (CAST_OVERFLOW); `QueryExecutionErrors` is `private[sql]`. */
+  def castOverflow(value: Any, from: org.apache.spark.sql.types.DataType,
+      to: org.apache.spark.sql.types.DataType): ArithmeticException =
+    errors.QueryExecutionErrors.castingCauseOverflowError(value, from, to)
+
+  /** Deterministic listener-event drain for dev tooling (graft.Profile)
+    * and specs that count jobs:
     * `SparkContext.listenerBus` is `private[spark]`, so the wait goes
     * through this in-package shim. */
   def waitForListeners(spark: SparkSession, timeoutMs: Long): Unit =

@@ -198,7 +198,7 @@ object SimilarityQueries {
   }
 
   private type MaxsimArtifact = (String, Seq[(Long, Seq[Double], Double)])
-  private val maxsimCache = java.util.Collections.synchronizedMap(
+  private[operators] val maxsimCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String,
         java.util.concurrent.CompletableFuture[MaxsimArtifact]]]())
@@ -237,7 +237,12 @@ object SimilarityQueries {
       _ => new java.util.concurrent.ConcurrentHashMap[String, FutureArtifact]())
     def run(f: FutureArtifact): MaxsimArtifact =
       try { val a = build(); f.complete(a); a }
-      catch { case e: Throwable => f.completeExceptionally(e); memo.remove(dir); throw e }
+      catch {
+        // conditional evict: once `f` is done, a concurrent stale-table
+        // recheck may already have replaced it with its own rebuild future,
+        // which an unconditional remove would evict
+        case e: Throwable => f.completeExceptionally(e); memo.remove(dir, f); throw e
+      }
     val mine = new FutureArtifact()
     val existing = memo.putIfAbsent(dir, mine)
     val got = if (existing == null) run(mine) else existing.join()

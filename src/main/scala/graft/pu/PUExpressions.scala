@@ -2,7 +2,7 @@ package graft.pu
 
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -75,29 +75,38 @@ object PUExpressions {
   /** One-pass iteration metrics. The reference spends 1 (Traditional,
     * TraditionalPULearner.scala:47-50) to 4 (PU-LEA,
     * GradualReductionPULearner.scala:41-49,74-79) separate `count()` actions
-    * per iteration — each a full pass over the data. At 100 TB that is the
-    * dominant per-iteration cost; one `agg` with conditional sums does all of
-    * them in a single pass (map-side partial aggregation, one tiny shuffle).
+    * per iteration — each a full pass over the data. Conditional sums do all
+    * of them in a single pass.
     */
   case class IterMetrics(newRelNeg: Long, totalPos: Long, totalRelNeg: Long,
                          totalUndef: Long)
 
-  /** One fused agg pass replacing the reference's 1–4 separate `count()`s
-    * per iteration. This is also the action that MATERIALIZES the freshly
-    * persisted iteration (persist is lazy), so per iteration there is
-    * exactly one metrics pass + the fit's passes — `Dataset.observe` could
-    * not fuse further: loop control needs these numbers BEFORE deciding
-    * whether the next fit happens at all, so they can't ride along on a
-    * later action. */
-  def iterMetrics(df: DataFrame, prevLabel: String, curLabel: String): IterMetrics = {
-    val row = df.agg(
-      sum(when(col(prevLabel) === undefLabel && col(curLabel) === relNegLabel, 1L)
-        .otherwise(0L)).as("newRelNeg"),
-      sum(when(col(curLabel) === posLabel, 1L).otherwise(0L)).as("totalPos"),
-      sum(when(col(curLabel) === relNegLabel, 1L).otherwise(0L)).as("totalRelNeg"),
-      sum(when(col(curLabel) === undefLabel, 1L).otherwise(0L)).as("totalUndef")
-    ).head()
+  /** The four [[IterMetrics]] counts as aggregate columns, in field order —
+    * the one definition shared by [[iterMetrics]] and the learners' observed
+    * checkpoint (`TwoStepPULearner.IterationState`). */
+  def iterMetricColumns(prevLabel: String, curLabel: String): Seq[Column] = Seq(
+    sum(when(col(prevLabel) === undefLabel && col(curLabel) === relNegLabel, 1L)
+      .otherwise(0L)).as("newRelNeg"),
+    sum(when(col(curLabel) === posLabel, 1L).otherwise(0L)).as("totalPos"),
+    sum(when(col(curLabel) === relNegLabel, 1L).otherwise(0L)).as("totalRelNeg"),
+    sum(when(col(curLabel) === undefLabel, 1L).otherwise(0L)).as("totalUndef"))
+
+  /** Reads a row of [[iterMetricColumns]] back; a null sum (no input rows)
+    * counts 0. */
+  def iterMetricsOf(row: Row): IterMetrics = {
     def l(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
     IterMetrics(l(0), l(1), l(2), l(3))
+  }
+
+  /** The iteration metrics of `df` as a standalone aggregate query: one
+    * fused pass (map-side partial sums, one tiny shuffle) replacing the
+    * reference's 1–4 `count()`s. Inside the iterative learners the same
+    * columns are an `observe` on each generation's checkpoint job
+    * (`TwoStepPULearner.IterationState`), so loop control gets its numbers
+    * without a job of their own; this form serves `pu_skeleton_metrics`
+    * and checks of a generation's metrics. */
+  def iterMetrics(df: DataFrame, prevLabel: String, curLabel: String): IterMetrics = {
+    val cols = iterMetricColumns(prevLabel, curLabel)
+    iterMetricsOf(df.agg(cols.head, cols.tail: _*).head())
   }
 }

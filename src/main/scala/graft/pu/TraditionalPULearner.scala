@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions.col
   * (reference: src/main/scala/ru/ispras/pu4spark/TraditionalPULearner.scala:9-76).
   *
   * Control flow lives on the driver (ML iteration, not tuple-at-a-time);
-  * data stays distributed. Per iteration: one fused metrics pass
-  * ([[PUExpressions.iterMetrics]] — the reference runs a separate `count()`)
-  * + one fit + one transform.
+  * data stays distributed. Per iteration: one checkpoint job that also
+  * yields the iteration's counts (`IterationState.advance` — the reference
+  * runs a separate `count()`) + one fit + one transform.
   */
 class TraditionalPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -35,16 +35,17 @@ class TraditionalPULearner[
 
     // 0 -> undefined(-1), 1 stays positive (reference :40)
     var curDF = replaceZerosByUndefLabel(oneStepPUDF, labelColumnName, prevLabel, undefLabel)
-    val state = new IterationState()
+    val state = iterationState()
 
     for (_ <- 1 to maxIters) {
       // threshold unlabeled rows into reliable negatives (reference :44-46)
-      curDF = state.advance(
+      val (generation, metrics) = state.advance(
         curDF.withColumn(curLabel,
-          binarize(col(finalLabel), col(prevLabel), relNegThreshold, undefLabel)))
+          binarize(col(finalLabel), col(prevLabel), relNegThreshold, undefLabel)),
+        prevLabel, curLabel)
+      curDF = generation
 
       // newly-converted reliable negatives; early exit when none (reference :47-55)
-      val metrics = iterMetrics(curDF, prevLabel, curLabel)
       if (metrics.newRelNeg == 0) {
         return curDF.drop(ProbabilisticClassifierConfig.featuresName)
       }

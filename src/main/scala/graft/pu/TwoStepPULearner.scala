@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.VectorIndexer
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
 /** Two-step PU learning skeleton: step one picks "reliable negatives" from
   * the unlabeled pool, step two trains a binary classifier on positives +
@@ -14,9 +13,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale changes vs the reference (SURVEY.md §4.3):
   *  - per-row logic is native expressions (see [[PUExpressions]]), no UDFs;
-  *  - iteration state management truncates lineage and unpersists superseded
-  *    iterations (the reference `cache()`s every iteration and never frees —
-  *    unbounded plan growth + a memory leak at scale).
+  *  - each labelling generation of the iterative loops costs exactly one
+  *    Spark job (see [[IterationState]]): an eager `localCheckpoint` that
+  *    truncates lineage and carries the iteration's counts as an `observe`,
+  *    where the reference `cache()`s every iteration, never frees it (a
+  *    memory leak at scale), lets the plan grow without bound, and runs 1–4
+  *    separate `count()` passes per iteration;
+  *  - a generation's checkpoint blocks are freed as soon as the next
+  *    generation exists, so at most two generations hold storage at once.
+  *
+  * A generation lives only in its local checkpoint: an executor that loses
+  * one of its blocks makes the next job over it fail loudly (Spark cannot
+  * recompute a truncated lineage), never silently recompute or drop rows.
   */
 abstract class TwoStepPULearner[
     E <: ProbabilisticClassifier[Vector, E, M],
@@ -73,47 +81,44 @@ abstract class TwoStepPULearner[
       .drop(transientCols: _*)
   }
 
-  /** Iteration-state manager: persists the current iteration (explicit
-    * MEMORY_AND_DISK for deterministic spill), truncates lineage every
-    * `checkpointEvery` iterations via localCheckpoint (iterative
-    * withColumn/rename otherwise grows an unbounded Catalyst plan — analysis
-    * time blows up past ~10 iterations), and unpersists the superseded
-    * iteration once the new one is materialized.
+  /** Iteration-state manager: one Spark job per generation.
+    *
+    * [[advance]] attaches a named `observe` of the four
+    * [[PUExpressions.iterMetricColumns]] sums to the new generation, runs an
+    * eager `localCheckpoint` (the generation's only job) and reads the
+    * metrics back from that execution's observed metrics — the
+    * `Dedup.connectedComponentsWithStats` pattern. Not the `Observation`
+    * helper: registering one poisons the session's ObservationManager into
+    * every later closure that captures the SparkSession ("Task not
+    * serializable" for unrelated queries, Spark 4.1.2).
+    *
+    * Every generation is a bare checkpoint leaf, so the superseded one is
+    * referenced by nothing once the next exists and is freed right away.
+    * The latest generation stays registered with
+    * [[graft.CheckpointUtil.track]]: the learner's output is built on it,
+    * and `releaseStragglers` frees it after the output is materialized.
     */
-  protected final class IterationState(checkpointEvery: Int = 3) {
-    private var prev: Option[(DataFrame, Boolean)] = None
-    private var prevPrev: Option[(DataFrame, Boolean)] = None
-    // a superseded CHECKPOINT can't be freed when its two-generation turn
-    // comes: the still-live persist generations after it root their lineage
-    // at it (they recompute from it if their own blocks are evicted). It is
-    // unreachable only once the NEXT checkpoint has truncated lineage and
-    // every persist generation rooted at the old one has itself been
-    // superseded — which is exactly when the next checkpoint's own release
-    // turn arrives. So checkpoint frees are deferred one checkpoint cycle.
-    private var deferredCheckpoint: Option[DataFrame] = None
-    private var iter = 0
+  protected class IterationState {
+    private var current: Option[DataFrame] = None
+    private var generation = 0
 
-    def advance(df: DataFrame): DataFrame = {
-      iter += 1
-      val isCheckpoint = checkpointEvery > 0 && iter % checkpointEvery == 0
-      val cur =
-        if (isCheckpoint)
-          graft.CheckpointUtil.track(df.localCheckpoint(eager = true))
-        else
-          df.persist(StorageLevel.MEMORY_AND_DISK)
-      // persist() is lazy: unpersisting `prev` NOW would evict it before
-      // `cur` is ever materialized, forcing a full lineage recompute. Keep
-      // two generations — by the next advance(), actions (iterMetrics/fit)
-      // have materialized `cur`, so its grandparent is safely evictable.
-      prevPrev.foreach { case (g, wasCheckpoint) =>
-        if (wasCheckpoint) {
-          deferredCheckpoint.foreach(graft.CheckpointUtil.releaseCheckpoint)
-          deferredCheckpoint = Some(g)
-        } else graft.CheckpointUtil.releasePersist(g)
-      }
-      prevPrev = prev
-      prev = Some((cur, isCheckpoint))
-      cur
+    /** Materialize `df` as the next generation; returns it with its
+      * [[PUExpressions.IterMetrics]] over `prevLabel` → `curLabel`. */
+    def advance(df: DataFrame, prevLabel: String,
+                curLabel: String): (DataFrame, IterMetrics) = {
+      generation += 1
+      val name = s"graft_pu_generation_$generation"
+      val metricCols = iterMetricColumns(prevLabel, curLabel)
+      val observed = df.observe(name, metricCols.head, metricCols.tail: _*)
+      val next = graft.CheckpointUtil.track(observed.localCheckpoint(eager = true))
+      val metrics = iterMetricsOf(observed.queryExecution.observedMetrics(name))
+      current.foreach(graft.CheckpointUtil.releaseCheckpoint)
+      current = Some(next)
+      (next, metrics)
     }
   }
+
+  /** A fresh [[IterationState]] for one `weight()` call; overridable so a
+    * subclass can instrument each generation. */
+  protected def iterationState(): IterationState = new IterationState
 }

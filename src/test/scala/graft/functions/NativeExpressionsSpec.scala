@@ -374,6 +374,92 @@ class NativeExpressionsSpec extends SparkSuite {
     assert(diff == 0)
   }
 
+  /** Runs `f` with `confs` set on the shared session, restoring the
+    * previous values (or unsetting) afterwards. */
+  private def withConfs[T](confs: (String, String)*)(f: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The two execution paths of a kernel: generated code inside a
+    * whole-stage span, and `eval()` with code generation off everywhere. */
+  private val codegenModes = Seq(
+    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "FALLBACK"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** The rows `e` yields over `in`, or the error it raises: the innermost
+    * exception's class plus the first error condition on the cause chain. */
+  private def outcome(in: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.Column): Either[String, Seq[org.apache.spark.sql.Row]] =
+    try Right(in.select(e).collect().toSeq)
+    catch {
+      case t: Throwable =>
+        val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+        val condition = chain.collectFirst {
+          case st: org.apache.spark.SparkThrowable if st.getCondition != null => st.getCondition
+        }
+        Left(s"${chain.last.getClass.getName} ${condition.getOrElse("")}")
+    }
+
+  /** `native` and `hof` give the same rows or the same error on every one
+    * of `rows` (one-row inputs from an RDD, so no constant folding), under
+    * both execution paths and both ANSI settings. */
+  private def assertParity(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row], native: () => org.apache.spark.sql.Column,
+      hof: () => org.apache.spark.sql.Column): Unit =
+    for ((mode, confs) <- codegenModes; ansi <- Seq("true", "false"))
+      withConfs(confs :+ ("spark.sql.ansi.enabled" -> ansi): _*) {
+        for (row <- rows) {
+          val in = spark.createDataFrame(spark.sparkContext.parallelize(Seq(row), 1), schema)
+          val (n, h) = (native(), hof())
+          val plan = in.select(n).queryExecution.executedPlan
+          val spans = plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+          assert(spans.nonEmpty == (mode == "codegen"), plan)
+          val (got, want) = (outcome(in, n), outcome(in, h))
+          assert(got == want, s"$mode ansi=$ansi input=$row: native $got, HOF $want")
+        }
+      }
+
+  test("MaxAbs == array_max(transform(abs)) on NaN, ±Inf, -0.0, nulls, empty") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val rows = Seq(Seq(1.0, -7.5, 3.25), Seq(1.0, nan, -3.0), Seq(nan), Seq(inf, nan),
+      Seq(-inf, 2.0), Seq(-0.0), Seq(0.0, -0.0), Seq(null, -2.0), Seq(null), Seq(null, nan),
+      Seq.empty, null).map(Row(_))
+    val schema = StructType(Seq(StructField("v", ArrayType(DoubleType, containsNull = true))))
+    assertParity(schema, rows, () => NativeExpressions.maxAbs(col("v")),
+      () => array_max(transform(col("v"), x => abs(x))))
+  }
+
+  test("ScaleRoundInt8 == transform(round(x * s) cast tinyint) on NaN, ±Inf, range edges") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    val rows = Seq(
+      Row(Seq(-1.5, 0.0, 2.5, -0.49999, 126.5), 1.0), // finite, HALF_UP ties
+      Row(Seq(0.5, -0.5, -0.0, 127.4, -127.5), 1.0), // range edges
+      Row(Seq(1.0, -2.0), 127.0 / 3.0),
+      Row(Seq(1.0, nan), 1.0), Row(Seq(inf), 1.0), Row(Seq(-inf), 1.0),
+      Row(Seq(inf), 0.0), // Inf * 0 = NaN
+      Row(Seq(1.0), nan), Row(Seq(1.0), inf),
+      Row(Seq(200.0), 1.0), Row(Seq(-128.4), 1.0), Row(Seq(-128.6), 1.0), // outside tinyint
+      Row(Seq.empty[Double], 1.0))
+    val schema = StructType(Seq(StructField("v", ArrayType(DoubleType, containsNull = false)),
+      StructField("s", DoubleType)))
+    assertParity(schema, rows, () => NativeExpressions.scaleRoundInt8(col("v"), col("s")),
+      () => transform(col("v"), x => round(x * col("s")).cast("tinyint")))
+  }
+
   test("DsirScore == transform(pmod) + aggregate(element_at) fold") {
     import spark.implicits._
     val buckets = 64

@@ -32,4 +32,26 @@ class ServingMemoSpec extends SparkSuite {
       SimilarityQueries.NQueriesServe.toLong * SimilarityQueries.K)
     spark.catalog.clearCache()
   }
+
+  test("a failing maxsim build evicts only its own memo entry") {
+    type Artifact = (String, Seq[(Long, Seq[Double], Double)])
+    val dir = "serving-memo-spec-failing-build"
+    val memo = SimilarityQueries.maxsimCache.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String,
+        java.util.concurrent.CompletableFuture[Artifact]]())
+    // another caller's rebuild future, installed while this build is still
+    // running — what a concurrent stale-table recheck does once the failing
+    // future is done
+    val theirs = java.util.concurrent.CompletableFuture.completedFuture[Artifact](
+      ("graft_maxsim_lists_other", Seq.empty))
+    val e = intercept[IllegalStateException] {
+      SimilarityQueries.maxsimServing(spark, dir, {
+        memo.put(dir, theirs)
+        throw new IllegalStateException("build failed")
+      })
+    }
+    assert(e.getMessage == "build failed")
+    assert(memo.get(dir) eq theirs, "the failed build evicted another caller's entry")
+    memo.remove(dir)
+  }
 }
